@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, register_views
 from ._util import floor_round, floor_round_sql
 from .registry import query
 
@@ -201,7 +201,7 @@ def f18_greatest_least(spark, sf_dir):
 )
 def g11_grouping_sets(spark, sf_dir):
     """GROUPING SETS aggregation with grouping() indicator columns."""
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, tables=("lineitem",))
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
@@ -612,8 +612,7 @@ def d4_format_epoch(spark, sf_dir):
 )
 def sq5_lateral_join(spark, sf_dir):
     """LATERAL join: top-2 nations by name per region."""
-    t(spark, sf_dir, "region").createOrReplaceTempView("region")
-    t(spark, sf_dir, "nation").createOrReplaceTempView("nation")
+    register_views(spark, sf_dir, tables=("region", "nation"))
     return spark.sql(
         """
         SELECT r.r_name, top_n.n_name
@@ -639,7 +638,7 @@ def sq5_lateral_join(spark, sf_dir):
 def sq6_values_inline(spark, sf_dir):
     """Inline VALUES table joined against a real table — the literal
     lookup-table pattern (a broadcast of a 3-row relation)."""
-    t(spark, sf_dir, "region").createOrReplaceTempView("region")
+    register_views(spark, sf_dir, tables=("region",))
     return spark.sql(
         """
         SELECT t.region_code, r.r_name

@@ -12,16 +12,13 @@ just pytest.
 from __future__ import annotations
 
 from ..nl.repair import repair_sql
-from ..sources.catalog import load_table
+from ..sources.catalog import register_views
 from .registry import ORACLES, query
 
 
 def _run(spark, sf_dir, tables, broken, meta=None, synonym_map=None):
-    cols: set[str] = set()
-    for t in tables:
-        df = load_table(spark, sf_dir, t)
-        df.createOrReplaceTempView(t)
-        cols |= set(df.columns)
+    views = register_views(spark, sf_dir, tables=tables)
+    cols = {c for df in views.values() for c in df.columns}
     return spark.sql(repair_sql(broken, cols, meta=meta, synonym_map=synonym_map))
 
 
@@ -41,7 +38,7 @@ def nl1_fence_extraction(spark, sf_dir):
         "GROUP BY c_mktsegment\n"
         "```"
     )
-    return _run(spark, sf_dir, ["customer"], broken)
+    return _run(spark, sf_dir, ("customer",), broken)
 
 
 @query(
@@ -56,7 +53,7 @@ def nl1_fence_extraction(spark, sf_dir):
 def nl2_fuzzy_identifier_repair(spark, sf_dir):
     """R4 end-to-end: typo'd identifiers fuzzy-repaired then executed."""
     broken = "SELECT c_custky, c_acctbl FROM customer WHERE c_acctbl > 9000"
-    return _run(spark, sf_dir, ["customer"], broken)
+    return _run(spark, sf_dir, ("customer",), broken)
 
 
 @query(
@@ -72,7 +69,7 @@ def nl3_alias_substitution(spark, sf_dir):
     """R2 end-to-end: dictionary aliases mapped to canonical columns then executed."""
     broken = "SELECT l_orderkey, qty FROM lineitem WHERE qty > 45"
     synonym_map = {"qty": "l_quantity", "orderid": "l_orderkey"}
-    return _run(spark, sf_dir, ["lineitem"], broken, synonym_map=synonym_map)
+    return _run(spark, sf_dir, ("lineitem",), broken, synonym_map=synonym_map)
 
 
 @query(
@@ -93,7 +90,7 @@ def nl5_full_ask_lifecycle(spark, sf_dir):
     from ..nl.ask import answer_question
     from ..nl.llm import StubLLM
 
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, tables=("lineitem",))
     meta = {
         "columns": [
             {
@@ -150,7 +147,7 @@ def nl4_literal_canonicalization(spark, sf_dir):
             }
         ]
     }
-    return _run(spark, sf_dir, ["customer"], broken, meta=meta)
+    return _run(spark, sf_dir, ("customer",), broken, meta=meta)
 
 
 @query(
@@ -179,8 +176,7 @@ def nl6_duckdb_dialect_passthrough(spark, sf_dir):
     is the switch-over path for that SQL.
     """
     from ..nl.dialect_shim import to_spark_sql
-    from ..sources.catalog import register_views
 
-    register_views(spark, sf_dir, tables=["events"])
+    register_views(spark, sf_dir, tables=("events",))
     duckdb_sql = ORACLES["nl6_duckdb_dialect_passthrough"]
     return spark.sql(to_spark_sql(duckdb_sql))

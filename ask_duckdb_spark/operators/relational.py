@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, register_views
 from ._util import (
     floor_round,
     floor_round_sql,
@@ -1075,7 +1075,7 @@ def d3_date_arith(spark, sf_dir):
 )
 def sq1_scalar_subquery(spark, sf_dir):
     """Scalar subquery: customers above the average account balance."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    register_views(spark, sf_dir, tables=("customer",))
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal FROM customer
@@ -1095,8 +1095,7 @@ def sq1_scalar_subquery(spark, sf_dir):
 )
 def sq2_in_subquery(spark, sf_dir):
     """IN subquery: orders from MACHINERY-segment customers."""
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    register_views(spark, sf_dir, tables=("orders", "customer"))
     return spark.sql(
         """
         SELECT o_orderkey FROM orders
@@ -1119,8 +1118,7 @@ def sq2_in_subquery(spark, sf_dir):
 )
 def sq3_correlated_exists(spark, sf_dir):
     """Correlated EXISTS: parts with a quantity-49+ lineitem."""
-    t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, tables=("part", "lineitem"))
     return spark.sql(
         """
         SELECT p_partkey FROM part p
@@ -1144,7 +1142,7 @@ def sq3_correlated_exists(spark, sf_dir):
 )
 def sq4_cte(spark, sf_dir):
     """CTE over big orders, then grouped priority counts."""
-    t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, tables=("orders",))
     return spark.sql(
         """
         WITH big_orders AS (

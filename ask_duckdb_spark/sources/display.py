@@ -4,11 +4,15 @@ The reference prints ``=== Query result (N rows) ===`` then a pandas
 head capped at ``max_rows`` with a truncation notice (reference:
 query_db.py:20-51, query_llm.py:397-412).
 
-Scale posture: we never ``collect()`` an unbounded result. The row
-count is computed engine-side (``df.count()``), and only ``limit(max_rows)``
-rows cross the Arrow boundary to pandas — the exact analogue of the
-reference's ``df.head(max_rows)`` display cap, but without materializing
-the full result on the driver first.
+Scale posture: we never ``collect()`` an unbounded result. One job
+fetches ``limit(max_rows + 1)`` rows across the Arrow boundary to
+pandas — the analogue of the reference's ``df.head(max_rows)`` display
+cap, without materializing the full result on the driver first. When at
+most ``max_rows`` rows come back, their number is the exact count and
+no other job runs. Only a truncated result pays a second, count-only
+query (``df.count()``, engine-side), and only when a count is asked
+for. Over a multi-partition input that count is two jobs under AQE:
+the partial counts' shuffle map stage, then the final aggregate.
 """
 
 from __future__ import annotations

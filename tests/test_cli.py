@@ -13,7 +13,9 @@ import pytest
 from ask_duckdb_spark.cli import ask as cli_ask
 from ask_duckdb_spark.cli import describe as cli_describe
 from ask_duckdb_spark.cli import sql as cli_sql
-from tests.conftest import SF_DIR
+from ask_duckdb_spark.cli._common import open_source
+from ask_duckdb_spark.sources.catalog import load_table, register_views
+from tests.conftest import SF_DIR, SF_DIR_001
 
 
 def exit_code(func, argv) -> int:
@@ -216,3 +218,75 @@ def test_ask_generate_schema(spark, tmp_path, capsys):
     names = [c["name"] for c in skeleton["columns"]]
     assert "queue" in names and "copytools" in names
     assert f"Wrote schema skeleton to: {out_path}" in capsys.readouterr().out
+
+
+# --- session-owned fixture views -------------------------------------------
+
+
+def _spy_view_bindings(spark, monkeypatch) -> list[str]:
+    """Names passed to createOrReplaceTempView from now on."""
+    calls: list[str] = []
+    cls = type(spark.range(1))  # the concrete (classic) DataFrame class
+    orig = cls.createOrReplaceTempView
+
+    def spy(self, name):
+        calls.append(name)
+        return orig(self, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", spy)
+    return calls
+
+
+def test_repeat_request_rebinds_no_view(spark, capsys, monkeypatch):
+    """A second request on the same --sf-dir finds every fixture view it
+    bound still in place: it re-binds none and prints the same result."""
+    argv = ["--sf-dir", SF_DIR, "--table", "orders",
+            "--query", "SELECT o_orderpriority, count(*) AS n FROM orders "
+                       "GROUP BY o_orderpriority ORDER BY 1"]
+    assert exit_code(cli_sql.main, argv) == 0
+    first = capsys.readouterr().out
+    calls = _spy_view_bindings(spark, monkeypatch)
+    assert exit_code(cli_sql.main, argv) == 0
+    assert calls == []
+    assert capsys.readouterr().out == first
+
+
+def test_view_replaced_elsewhere_is_rebound(spark, capsys):
+    """A fixture view another caller re-bound (here to sf0.01) fails the
+    ownership check: the next request binds --sf-dir's table again."""
+    register_views(spark, SF_DIR)
+    load_table(spark, SF_DIR_001, "lineitem").createOrReplaceTempView("lineitem")
+    expected = load_table(spark, SF_DIR, "lineitem").count()
+    assert spark.table("lineitem").count() != expected
+    code = exit_code(
+        cli_sql.main,
+        ["--sf-dir", SF_DIR, "--table", "lineitem",
+         "--query", "SELECT count(*) AS n FROM lineitem"],
+    )
+    assert code == 0
+    assert capsys.readouterr().out.split()[-1] == str(expected)
+
+
+def test_dropped_view_is_registered_again(spark, monkeypatch):
+    open_source(SF_DIR, "tests")
+    spark.catalog.dropTempView("orders")
+    assert not spark.catalog.tableExists("orders")
+    calls = _spy_view_bindings(spark, monkeypatch)
+    open_source(SF_DIR, "tests")
+    assert calls == ["orders"]
+    assert spark.catalog.tableExists("orders")
+
+
+def test_catalog_source_is_resolved_on_every_call(spark):
+    """``catalog:`` tables are mutable, so load_table never memoizes them
+    and every register_views call binds the view anew."""
+    try:
+        spark.range(3).createOrReplaceTempView("src_probe")
+        register_views(spark, "catalog:src_", tables=("probe",))
+        assert spark.table("probe").count() == 3
+        spark.range(5).createOrReplaceTempView("src_probe")
+        register_views(spark, "catalog:src_", tables=("probe",))
+        assert spark.table("probe").count() == 5
+    finally:
+        spark.catalog.dropTempView("probe")
+        spark.catalog.dropTempView("src_probe")

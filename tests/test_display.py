@@ -3,25 +3,50 @@
 from __future__ import annotations
 
 import io
+import uuid
 
 from ask_duckdb_spark.sources.display import display_result, result_preview
 
 
+def _preview_jobs(spark, df, **kw):
+    """result_preview's return value and the number of Spark jobs it ran,
+    read through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"preview-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "result_preview job budget")
+    try:
+        out = result_preview(df, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_preview_under_cap_exact_count_single_job(spark):
-    df = spark.range(10)
-    total, pdf = result_preview(df, max_rows=100)
+    (total, pdf), jobs = _preview_jobs(
+        spark, spark.range(0, 10, 1, 4), max_rows=100
+    )
     assert total == 10 and len(pdf) == 10
+    assert jobs == 1
 
 
 def test_preview_truncates_at_cap(spark):
-    df = spark.range(25)
-    total, pdf = result_preview(df, max_rows=10)
+    # one max_rows+1 fetch, then the count: under AQE its shuffle map
+    # stage over the four partitions and the final aggregate are two jobs
+    (total, pdf), jobs = _preview_jobs(
+        spark, spark.range(0, 25, 1, 4), max_rows=10
+    )
     assert total == 25 and len(pdf) == 10
+    assert jobs == 3
 
 
 def test_preview_no_count_when_disabled(spark):
-    total, pdf = result_preview(spark.range(25), max_rows=10, count=False)
+    (total, pdf), jobs = _preview_jobs(
+        spark, spark.range(0, 25, 1, 4), max_rows=10, count=False
+    )
     assert total is None and len(pdf) == 10
+    assert jobs == 1
 
 
 def test_display_format(spark):

@@ -3,9 +3,10 @@
 Pins, per VERDICT r13's "next round" items: x22's runtime exchange
 reuse (item 4 — the claim finally carries executable evidence), x20's
 exchange-free vectorized decode (item 1 — the widen restore was
-applied, cold-measured, and reverted on an 11-run close series,
-BENCHLOG r14), and x2's straight-pipeline shape after the stale
-single-consumer persist was dropped.
+applied, cold-measured, and reverted on the widen-vs-control subset
+(close1-5 + ctl1-4) of the 17-run r14 close series, BENCHLOG r14), and
+x2's straight-pipeline shape after the stale single-consumer persist
+was dropped.
 """
 
 from __future__ import annotations
@@ -42,9 +43,10 @@ def test_x22_aqe_reuses_tokenize_exchange(spark):
 
 
 def test_x20_vectorized_decode_no_fixture_exchange(spark):
-    """x20 (VERDICT r13 item 1, settled by the r14 9-run cold close
-    series): the vectorized decode stays (MapInPandas, no
-    BatchEvalPython row loop), and the widen() round-robin exchange
+    """x20 (VERDICT r13 item 1, settled by the widen-vs-control subset
+    (close1-5 + ctl1-4) of the 17-run r14 close series): the
+    vectorized decode stays (MapInPandas, no BatchEvalPython row
+    loop), and the widen() round-robin exchange
     stays GONE — on the ~600 KB fixture the 32-task Python stage it
     creates is a max-of-32 straggler lottery (cold-series medians:
     widen 1.24 s vs no-widen 0.40 s), while at 100 TB the scan itself
