@@ -260,52 +260,68 @@ def _banded(sig: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sig: DataFrame, id_col: str) -> DataFrame:
-    """Banded LSH: pairs of ids that collide in >=1 band.
+def _sig_est(sig_a, sig_b) -> Column:
+    """Signature-estimated Jaccard: matching slots / N_HASHES.
 
-    Formulated as ONE (band, bucket) aggregation + in-bucket pair
-    generation rather than a bucket self-join: ``collect_list`` gathers
-    each bucket's (id, sig) members — bounded at MAX_BUCKET by the same
-    filter that implements the skew guard, so per-group state is
-    ≤ MAX_BUCKET * (32 longs + id) no matter how degenerate the corpus —
-    and a narrow ``transform x filter`` nested loop emits the ordered
-    pairs. vs the previous window-guard + self-join shape this moves the
-    bands frame through ONE exchange instead of two and collapses ~8
-    sequential AQE stage waves to ~4 (measured 1.65 s -> 0.7 s for the
-    pairing half at sf0.1, identical row set). At 100 TB the shuffle
-    volume halves and the skew cap doubles as the memory bound.
-
-    The signature rides along in the member structs so callers can
-    estimate Jaccard from ``sig_a``/``sig_b`` without re-joining the
-    signature frame (each extra join would recompute the hashing).
-    """
-    return _pairs_from_bands(_banded(sig, id_col), id_col)
-
-
-def _bucket_members(bands: DataFrame, id_col: str) -> DataFrame:
-    """(band, bucket, ms): capped member arrays per LSH bucket — the
-    shared front half of both pair generators (ADVICE r13: the
-    groupBy + skew guard were copy-pasted between them and could
-    drift; now there is exactly one definition of bucket membership).
-    """
+    The one estimator definition: :func:`neardup_pairs` and the
+    streaming ingest's cross-batch probe both call it, so it can never
+    drift between consumers. The HOF chain is kept deliberately: an
+    r14 interleaved A/B (OPTIMIZATION_r14.md, item 2) measured the
+    32-term unrolled element_at form ~15-20% SLOWER end-to-end at
+    sf0.1 — Spark 4's HOF evaluation is fast, and the unrolled tree
+    only bloats the plan/codegen (the same negative result as the
+    vectors.py unroll trial, scripts/r14_dot_micro.py: all dot
+    formulations within 3% per-pair)."""
     return (
+        F.size(
+            F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
+        )
+        / F.lit(N_HASHES)
+    )
+
+
+def neardup_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, jaccard_est): near-duplicate pairs (id_a < id_b,
+    signature-estimated Jaccard >= 0.5) over a banded
+    (id, sig, band, bucket) frame — the one pair kernel behind x2, x2f,
+    the incremental ingest (:func:`incremental_components_update`) and
+    the streaming dedup (streaming/neardup.py).
+
+    1. ONE (band, bucket) aggregation: ``collect_list`` gathers each
+       bucket's (id, sig) members. Buckets above MAX_BUCKET members are
+       dropped before any pair exists — the skew guard (degenerate
+       boilerplate buckets) and the memory bound (per-group state is
+       <= MAX_BUCKET * (32 longs + id) however degenerate the corpus).
+       vs a bucket self-join this moves the bands frame through ONE
+       exchange instead of two (r5: 1.65 s -> 0.7 s for the pairing
+       half at sf0.1, identical row set).
+    2. A narrow ``transform x filter`` nested loop emits the ordered
+       in-bucket pairs; the signatures ride along in the member
+       structs, so the estimate needs no re-join of the signature frame.
+    3. The estimate (:func:`_sig_est`) is projected right after the
+       explode — same codegen stage, before any exchange — so what
+       reaches the dedup exchange is three scalars (~24 B/pair), not two
+       32-long signatures (~550 B/pair).
+    4. Threshold, then dedup: a pair colliding in k bands appears k
+       times, each carrying the identical estimate (a pure function of
+       the two signatures), so filter-then-dedup == dedup-then-filter
+       and keep-any == keep-first. The scalar-only ``dropDuplicates``
+       plans as a HashAggregate, not the SortAggregate (two extra
+       Sorts) that array columns force.
+
+    The threshold is part of the kernel: every caller dedups at 0.5,
+    the same cut x2's DuckDB oracle audits.
+    """
+    members = (
         bands.groupBy("band", "bucket")
         .agg(
             F.collect_list(
                 F.struct(F.col(id_col).alias("i"), F.col("sig").alias("s"))
             ).alias("ms")
         )
-        # Skew guard AND memory bound: degenerate boilerplate buckets
-        # (> MAX_BUCKET members) are dropped before any pair exists.
         .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET))
     )
-
-
-def _raw_sig_pairs(bands: DataFrame, id_col: str) -> DataFrame:
-    """(id_a, id_b, sig_a, sig_b) candidate pairs straight out of the
-    bucket loop, PRE-dedup (a pair colliding in k bands appears k
-    times) — the shared in-bucket nested-loop pair generation."""
-    pairs = _bucket_members(bands, id_col).select(
+    pairs = members.select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -322,22 +338,14 @@ def _raw_sig_pairs(bands: DataFrame, id_col: str) -> DataFrame:
                 )
             )
         ).alias("p")
-    )
-    return pairs.select("p.id_a", "p.id_b", "p.sig_a", "p.sig_b")
-
-
-def _pairs_from_bands(bands: DataFrame, id_col: str) -> DataFrame:
-    """In-bucket ordered pair generation over a (id, sig, band, bucket)
-    frame — the second half of :func:`lsh_candidate_pairs`, split out so
-    an INCREMENTAL ingest can feed it a pruned band frame (persisted
-    index rows for touched buckets ∪ the new batch's bands) instead of
-    re-banding the whole corpus (scripts/x140_trial.py's end-to-end
-    path). Skew/memory cap and dedup semantics identical to the full
-    path by construction."""
+    ).select("p.id_a", "p.id_b", "p.sig_a", "p.sig_b")
     return (
-        _raw_sig_pairs(bands, id_col)
-        # a pair colliding in k bands appears k times; sigs are
-        # functionally dependent on the ids, so duplicates are exact.
+        pairs.select(
+            "id_a",
+            "id_b",
+            _sig_est(F.col("sig_a"), F.col("sig_b")).alias("jaccard_est"),
+        )
+        .filter(F.col("jaccard_est") >= 0.5)
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -418,11 +426,14 @@ _X2_ORACLE = _minhash_oracle()
 
 @query("x2_minhash_neardup", oracle=_X2_ORACLE)
 def x2_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
+    """MinHash-LSH near-duplicate pairs with signature-estimated Jaccard.
 
-    Fully oracle-checked: the signatures are engine-portable (see
+    :func:`neardup_pairs` over the banded portable signatures. Fully
+    oracle-checked: the signatures are engine-portable (see
     minhash_signatures), so the DuckDB twin regenerates identical
-    sketches and the driver value-hashes the pair list + estimates."""
+    sketches and the oracle check value-hashes the pair list +
+    estimates. The same kernel serves x2f, the incremental ingest and the
+    streaming dedup, so this oracle audits all of their pairing."""
     d = load_table(spark, sf_dir, "documents")
     # No persist (r14): the r5-era self-join formulation read the
     # signature frame from THREE consumers (both join sides + the
@@ -432,81 +443,9 @@ def x2_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on every execution with nothing reusing the blocks. Single
     # consumer -> straight pipeline.
     sig = minhash_signatures(d, "doc_id", "text")
-    return _neardup_pairs_from_signatures(sig)
-
-
-def _sig_est(sig_a, sig_b) -> Column:
-    """Signature-estimated Jaccard: matching slots / N_HASHES.
-
-    One definition shared by the registered est path and
-    :func:`_jaccard_filtered` so the estimator can never drift between
-    consumers. The HOF chain is kept deliberately: an r14 interleaved
-    A/B (scripts/r14_ab_misc.py) measured the 32-term unrolled
-    element_at form ~15-20% SLOWER end-to-end at sf0.1 — Spark 4's
-    HOF evaluation is fast, and the unrolled tree only bloats the
-    plan/codegen (the same negative result as the vectors.py unroll
-    trial, scripts/r14_dot_micro.py: all dot formulations within 3%
-    per-pair)."""
-    return (
-        F.size(
-            F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(N_HASHES)
+    return neardup_pairs(_banded(sig, "doc_id"), "doc_id").orderBy(
+        "id_a", "id_b"
     )
-
-
-def _pairs_est_from_bands(bands: DataFrame, id_col: str) -> DataFrame:
-    """(id_a, id_b, jaccard_est) straight out of the bucket loop.
-
-    Twin of :func:`_pairs_from_bands` for consumers that only need the
-    ESTIMATE (x2/x2f's registered path): the estimate is projected
-    immediately after the pair explode — in the SAME codegen stage,
-    before any exchange — so the frame that reaches the dedup exchange
-    is three scalars (~24 B/pair) instead of two 32-long signatures
-    (~550 B/pair), and ``dropDuplicates`` runs as a HashAggregate
-    instead of the SortAggregate (two extra Sorts) that array columns
-    force. r14: the estimate itself moved OUT of the bucket lambda
-    into the post-explode projection (:func:`_sig_est` — one shared
-    definition; placement measured a wash, the shared definition is
-    the point). Identical pair set and estimates
-    by construction: est is a pure function of the two signatures, so
-    every duplicate (multi-band collision) carries the same value and
-    keep-any == keep-first."""
-    return _raw_sig_pairs(bands, id_col).select(
-        "id_a", "id_b", _sig_est(F.col("sig_a"), F.col("sig_b")).alias("jaccard_est")
-    )
-
-
-def _neardup_pairs_from_signatures(sig: DataFrame) -> DataFrame:
-    """Banded-LSH pairs + signature-estimated Jaccard >= 0.5 from a
-    (doc_id, sig) frame — shared by the portable and fast paths.
-
-    r13: est-early formulation — threshold-filter BEFORE the pair
-    dedup (each duplicate of a pair carries the identical estimate, so
-    filter-then-dedup == dedup-then-filter) and dedup on scalars only
-    (see :func:`_pairs_est_from_bands`)."""
-    return (
-        _pairs_est_from_bands(_banded(sig, "doc_id"), "doc_id")
-        .filter(F.col("jaccard_est") >= 0.5)
-        .dropDuplicates(["id_a", "id_b"])
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _jaccard_filtered(pairs: DataFrame) -> DataFrame:
-    """Signature-estimated Jaccard >= 0.5 over a candidate-pair frame
-    carrying sig_a/sig_b — shared by the full path and the incremental
-    probe (scripts/x140_trial.py)."""
-    # Verify candidates with estimated Jaccard from the signatures that
-    # rode through the bucket join (no re-join, no re-shuffle of text).
-    # Same estimator as the registered path (_sig_est — one
-    # definition, no drift).
-    est = pairs.select(
-        "id_a",
-        "id_b",
-        _sig_est(F.col("sig_a"), F.col("sig_b")).alias("jaccard_est"),
-    )
-    return est.filter(F.col("jaccard_est") >= 0.5).orderBy("id_a", "id_b")
 
 
 #: x2f's oracle: the PAIR-SET projection of x2's full oracle. The pair
@@ -535,14 +474,15 @@ def x2f_minhash_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2x/token hash saving is hours of cluster time and the sketch
     family (permutations, banding, skew cap) is IDENTICAL — only the
     token hash primitive differs. Mirrors the x3 (exact) / x2 (sketch)
-    differential pattern one level down. Callers who want the (fast-
-    family) estimates use _neardup_pairs_from_signatures directly.
+    differential pattern one level down. Same pair kernel as x2
+    (:func:`neardup_pairs`); callers who want the (fast-family)
+    estimates keep its ``jaccard_est`` column.
     """
     d = load_table(spark, sf_dir, "documents")
     # No persist — single consumer since the r13 bucket-loop (see x2).
     sig = minhash_signatures_fast(d, "doc_id", "text")
-    pairs = _neardup_pairs_from_signatures(sig).select("id_a", "id_b")
-    return pairs.orderBy("id_a", "id_b")
+    pairs = neardup_pairs(_banded(sig, "doc_id"), "doc_id")
+    return pairs.select("id_a", "id_b").orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------
@@ -666,7 +606,7 @@ def x3_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     # r13 NOTE — measured, kept as the JOIN form: an in-bucket
     # collect_list + nested-transform pair generation (x2's
-    # _pairs_from_bands shape) was A/B'd here and LOST (32 s vs 21 s
+    # neardup_pairs shape) was A/B'd here and LOST (32 s vs 21 s
     # steady-state at sf0.1, 11.4M overlap pairs): higher-order-
     # function lambdas evaluate interpreted per pair, while the
     # self-join's row stream is whole-stage-codegen'd — at millions of
@@ -2348,7 +2288,7 @@ def x140_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per clustered doc and so exceeds the raw edge list it
     replaces; both paths sit on the job floor (0.62-0.87x). The
     premise's real form is END-TO-END: hashing + pairing only the
-    batch against the persisted banded index (the `_pairs_from_bands`
+    batch against the persisted banded index (the `neardup_pairs`
     probe) holds a FLAT wall in corpus size while full re-ingest grows
     ~linearly — 2.38x at 500k docs with a fixed 5,000-doc batch
     (13.3 s -> 5.6 s, row-identical; SCALE.md r10, whose quiet-host
@@ -2430,8 +2370,8 @@ def incremental_components_update(
     Cost is O(batch): only the batch is shingled/hashed; the persisted
     ``banded_index`` (see :func:`banded_signature_index`, covering the
     OLD docs) is semi-joined down to buckets the batch touches before
-    any pair exists; pairing/Jaccard run the exact production
-    `_pairs_from_bands`/`_jaccard_filtered` path; the ITERATIVE kernel
+    any pair exists; pairing/Jaccard run x2's oracle-audited pair
+    kernel (:func:`neardup_pairs`); the ITERATIVE kernel
     sees only the label-contracted new-edge graph (O(batch) vertices —
     r11's contract-then-solve, see the in-body comment), and the
     manifest is relabeled through the winner map in one non-iterative
@@ -2509,7 +2449,7 @@ def incremental_components_update(
     bands_new = _banded(sig_new, id_col).persist()
     touched = bands_new.select("band", "bucket").dropDuplicates()
     old_touched = banded_index.join(touched, ["band", "bucket"], "left_semi")
-    cand = _pairs_from_bands(old_touched.unionByName(bands_new), id_col)
+    cand = neardup_pairs(old_touched.unionByName(bands_new), id_col)
     # Keep only pairs with >= 1 batch member: old-old pairs surfacing
     # in touched buckets are connectivity the manifest already owns.
     bset = docs_batch.select(F.col(id_col).alias("_mid"), F.lit(True).alias("_in"))
@@ -2546,7 +2486,7 @@ def incremental_components_update(
     # r11); the cut is structural: the r10 kernel joined |manifest|
     # star edges per propagation round, i.e. O(manifest) work per
     # ingest hidden inside "O(batch)".
-    new_edges = _jaccard_filtered(cand).select("id_a", "id_b").persist()
+    new_edges = cand.select("id_a", "id_b").persist()
     # Touched-vertex set (batch-sized): semi-join the manifest down to
     # it BEFORE any contraction join, so the corpus-sized manifest is
     # only ever STREAMED against a broadcast hash set — at 100 TB the

@@ -10,7 +10,7 @@ production shape is a ``foreachBatch`` pipeline that, per micro-batch:
 2. drops every incoming doc that is a near-dup (signature-estimated
    Jaccard >= 0.5) of an EARLIER document — either one already in the
    accumulated band store (previous batches) or a lower-id document in
-   the same batch (``lsh_candidate_pairs``);
+   the same batch (x2's pair kernel, ``neardup_pairs``);
 3. appends the batch's band rows (kept AND dropped docs — a dropped
    copy must still shadow future copies of the same content) to the
    parquet band store and the surviving doc ids to the output sink.
@@ -38,27 +38,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     MAX_BUCKET,
-    N_HASHES,
     _banded,
-    lsh_candidate_pairs,
+    _sig_est,
     minhash_signatures_fast,
+    neardup_pairs,
 )
 
 __all__ = ["neardup_ingest", "start_neardup_ingest"]
-
-
-def _est(sig_a, sig_b):
-    return (
-        F.size(
-            F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(N_HASHES)
-    ).alias("jaccard_est")
 
 
 def neardup_ingest(
@@ -72,77 +64,81 @@ def neardup_ingest(
 
     Exposed separately from the stream wiring so the logic is testable
     batch-by-batch and reusable from any orchestration (foreachBatch,
-    a scheduler-driven incremental job, a backfill loop).
+    a scheduler-driven incremental job, a backfill loop). A store that
+    exists but cannot be read raises; the batch's signature cache is
+    released either way.
     """
     sig = minhash_signatures_fast(batch_df, "doc_id", "text").persist()
-    bands = _banded(sig, "doc_id")
-
-    # --- cross-batch drops: probe the accumulated store ---------------
     try:
-        store = spark.read.parquet(store_dir)
-        have_store = True
-    except Exception:
-        have_store = False
-    if have_store:
-        # per-batch skew cap on the store side (prefix semantics).
-        ok = (
-            store.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") <= MAX_BUCKET)
-            .select("band", "bucket")
-        )
-        capped = store.join(ok, ["band", "bucket"])
-        cross = (
-            bands.select("doc_id", "sig", "band", "bucket")
-            .join(
-                capped.select(
-                    F.col("doc_id").alias("old_id"),
-                    F.col("sig").alias("old_sig"),
-                    "band",
-                    "bucket",
-                ),
-                ["band", "bucket"],
+        bands = _banded(sig, "doc_id")
+
+        # --- cross-batch drops: probe the accumulated store -----------
+        # Only a MISSING store means "no store yet": read as empty, a
+        # corrupt one would silently switch cross-batch dedup off.
+        try:
+            store = spark.read.parquet(store_dir)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            store = None
+        if store is not None:
+            # per-batch skew cap on the store side (prefix semantics).
+            ok = (
+                store.groupBy("band", "bucket")
+                .count()
+                .filter(F.col("count") <= MAX_BUCKET)
+                .select("band", "bucket")
             )
-            .select("doc_id", _est(F.col("sig"), F.col("old_sig")))
-            .filter(F.col("jaccard_est") >= 0.5)
-            .select("doc_id")
+            capped = store.join(ok, ["band", "bucket"])
+            cross = (
+                bands.select("doc_id", "sig", "band", "bucket")
+                .join(
+                    capped.select(
+                        F.col("doc_id").alias("old_id"),
+                        F.col("sig").alias("old_sig"),
+                        "band",
+                        "bucket",
+                    ),
+                    ["band", "bucket"],
+                )
+                .filter(_sig_est(F.col("sig"), F.col("old_sig")) >= 0.5)
+                .select("doc_id")
+                .distinct()
+            )
+        else:
+            cross = spark.createDataFrame([], "doc_id bigint")
+
+        # --- in-batch drops: lower-id wins (arrival order in batch) ---
+        inbatch = (
+            neardup_pairs(bands, "doc_id")
+            .select(F.col("id_b").alias("doc_id"))
             .distinct()
         )
-    else:
-        cross = spark.createDataFrame([], "doc_id bigint")
 
-    # --- in-batch drops: lower-id wins (arrival order within batch) ---
-    inbatch = (
-        lsh_candidate_pairs(sig, "doc_id")
-        .select("id_b", _est(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("jaccard_est") >= 0.5)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
+        dropped = cross.union(inbatch).distinct()
+        kept = batch_df.select("doc_id").join(dropped, "doc_id", "left_anti")
 
-    dropped = cross.union(inbatch).distinct()
-    kept = batch_df.select("doc_id").join(dropped, "doc_id", "left_anti")
-
-    # --- sinks: append-only store + survivors -------------------------
-    # Survivors land in a per-batch subdirectory written with
-    # mode=overwrite: a restarted batch REPLACES its own output instead
-    # of appending a duplicate (the foreachBatch idempotency recipe —
-    # same as events.write_tumbling_counts_idempotent). The band store
-    # is append-only; a crash between the two writes re-appends band
-    # rows on replay, which widens a bucket's count but never creates
-    # false pairs (equal ids are filtered by id_a < id_b).
-    dst = (
-        os.path.join(out_dir, f"batch_id={batch_id}")
-        if batch_id is not None
-        else out_dir
-    )
-    kept.write.mode("overwrite" if batch_id is not None else "append").parquet(
-        dst
-    )
-    bands.select("band", "bucket", "doc_id", "sig").write.mode(
-        "append"
-    ).parquet(store_dir)
-    sig.unpersist()
+        # --- sinks: append-only store + survivors ---------------------
+        # Survivors land in a per-batch subdirectory written with
+        # mode=overwrite: a restarted batch REPLACES its own output instead
+        # of appending a duplicate (the foreachBatch idempotency recipe —
+        # same as events.write_tumbling_counts_idempotent). The band store
+        # is append-only; a crash between the two writes re-appends band
+        # rows on replay, which widens a bucket's count but never creates
+        # false pairs (equal ids are filtered by id_a < id_b).
+        dst = (
+            os.path.join(out_dir, f"batch_id={batch_id}")
+            if batch_id is not None
+            else out_dir
+        )
+        kept.write.mode(
+            "overwrite" if batch_id is not None else "append"
+        ).parquet(dst)
+        bands.select("band", "bucket", "doc_id", "sig").write.mode(
+            "append"
+        ).parquet(store_dir)
+    finally:
+        sig.unpersist()
 
 
 def start_neardup_ingest(

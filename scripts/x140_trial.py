@@ -47,12 +47,11 @@ from pyspark.sql import functions as F  # noqa: E402
 from ask_duckdb_spark.operators.dedup import (  # noqa: E402
     MAX_BUCKET,
     _banded,
-    _jaccard_filtered,
     _min_label_components,
-    _pairs_from_bands,
     banded_signature_index,
     incremental_components_update,
     minhash_signatures,
+    neardup_pairs,
     x2_minhash_neardup,
 )
 from ask_duckdb_spark.session import get_spark  # noqa: E402
@@ -256,9 +255,9 @@ def main() -> int:
           f"[owned state, not timed]")
 
     t0 = time.time()
-    old_edges = _jaccard_filtered(
-        _pairs_from_bands(spark.table(idx_table), "doc_id")
-    ).select("id_a", "id_b")
+    old_edges = neardup_pairs(spark.table(idx_table), "doc_id").select(
+        "id_a", "id_b"
+    )
     m_e2e = _min_label_components(old_edges, who="x140-trial manifest-e2e")
     m_e2e.write.mode("overwrite").parquet(manifest_e2e_pq)
     m_e2e.unpersist()

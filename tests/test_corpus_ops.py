@@ -275,6 +275,7 @@ def test_incremental_components_update_library_path(spark):
         _min_label_components,
         banded_signature_index,
         incremental_components_update,
+        neardup_pairs,
     )
     from tests.conftest import SF_DIR_001
 
@@ -291,14 +292,7 @@ def test_incremental_components_update_library_path(spark):
     # MAX_BUCKET decisions and could never contain the old-old
     # connectivity the cap caveat is about — this is the state a
     # production pipeline actually owns.
-    from ask_duckdb_spark.operators.dedup import (
-        _jaccard_filtered,
-        _pairs_from_bands,
-    )
-
-    old_pairs = _jaccard_filtered(
-        _pairs_from_bands(index, "doc_id")
-    ).select("id_a", "id_b")
+    old_pairs = neardup_pairs(index, "doc_id").select("id_a", "id_b")
     manifest = _min_label_components(old_pairs, who="test manifest")
 
     upd = incremental_components_update(batch, index, manifest)
@@ -328,11 +322,10 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
     while the batch doc S+A+B reads ~ 0.65 / 0.56 against them (edges
     to both)."""
     from ask_duckdb_spark.operators.dedup import (
-        _jaccard_filtered,
         _min_label_components,
-        _pairs_from_bands,
         banded_signature_index,
         incremental_components_update,
+        neardup_pairs,
     )
 
     def block(p):
@@ -347,9 +340,7 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
 
     index = banded_signature_index(old)
     manifest = _min_label_components(
-        _jaccard_filtered(_pairs_from_bands(index, "doc_id")).select(
-            "id_a", "id_b"
-        ),
+        neardup_pairs(index, "doc_id").select("id_a", "id_b"),
         who="merge-test manifest",
     )
     man = {r.v: r.label for r in manifest.collect()}
@@ -364,10 +355,8 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
 
     # And the answer is identical to a full recompute over old ∪ batch.
     full = _min_label_components(
-        _jaccard_filtered(
-            _pairs_from_bands(
-                banded_signature_index(old.unionByName(batch)), "doc_id"
-            )
+        neardup_pairs(
+            banded_signature_index(old.unionByName(batch)), "doc_id"
         ).select("id_a", "id_b"),
         who="merge-test full",
     )
@@ -391,13 +380,12 @@ def test_incremental_cap_boundary_divergence(spark):
 
     from ask_duckdb_spark.operators.dedup import (
         MAX_BUCKET,
-        _jaccard_filtered,
+        _banded,
         _min_label_components,
-        _pairs_from_bands,
         banded_signature_index,
         incremental_components_update,
-        lsh_candidate_pairs,
         minhash_signatures,
+        neardup_pairs,
     )
 
     text = " ".join(f"tok{j}" for j in range(12))
@@ -413,9 +401,7 @@ def test_incremental_cap_boundary_divergence(spark):
     # Old-only ingest: every band bucket holds exactly MAX_BUCKET
     # members — at the cap, kept — so the old docs form one component.
     index = banded_signature_index(old)
-    old_edges = _jaccard_filtered(
-        _pairs_from_bands(index, "doc_id")
-    ).select("id_a", "id_b")
+    old_edges = neardup_pairs(index, "doc_id").select("id_a", "id_b")
     manifest = _min_label_components(old_edges, who="cap-boundary manifest")
     man_rows = sorted((r.v, r.label) for r in manifest.collect())
     assert len(man_rows) == n_old
@@ -425,10 +411,9 @@ def test_incremental_cap_boundary_divergence(spark):
     # MAX_BUCKET + 5 members, over the cap — dropped before any pair
     # exists. The old connectivity is lost wholesale.
     all_docs = old.unionByName(batch)
-    full_edges = _jaccard_filtered(
-        lsh_candidate_pairs(
-            minhash_signatures(all_docs, "doc_id", "text"), "doc_id"
-        )
+    full_edges = neardup_pairs(
+        _banded(minhash_signatures(all_docs, "doc_id", "text"), "doc_id"),
+        "doc_id",
     )
     assert full_edges.count() == 0, "cap did not bind — fixture broken"
 
@@ -449,11 +434,10 @@ def test_incremental_update_rejects_reingested_ids(spark):
     from pyspark.sql import functions as F
 
     from ask_duckdb_spark.operators.dedup import (
-        _jaccard_filtered,
         _min_label_components,
-        _pairs_from_bands,
         banded_signature_index,
         incremental_components_update,
+        neardup_pairs,
     )
     from tests.conftest import SF_DIR_001
 
@@ -464,9 +448,7 @@ def test_incremental_update_rejects_reingested_ids(spark):
     old_docs = d.filter(F.col("doc_id") < cut)
     index = banded_signature_index(old_docs)
     manifest = _min_label_components(
-        _jaccard_filtered(_pairs_from_bands(index, "doc_id")).select(
-            "id_a", "id_b"
-        ),
+        neardup_pairs(index, "doc_id").select("id_a", "id_b"),
         who="reingest-guard manifest",
     )
     # A "batch" that re-ingests existing docs violates the contract.
@@ -509,12 +491,11 @@ def test_banded_index_bucketed_probe_exchange_free(spark):
 
     from ask_duckdb_spark.operators.dedup import (
         _banded,
-        _jaccard_filtered,
         _min_label_components,
-        _pairs_from_bands,
         banded_signature_index,
         incremental_components_update,
         minhash_signatures,
+        neardup_pairs,
     )
     from ask_duckdb_spark.plans.checks import formatted_plan, num_shuffles
     from ask_duckdb_spark.sources.bucketing import (
@@ -590,9 +571,7 @@ def test_banded_index_bucketed_probe_exchange_free(spark):
         # End-to-end through the library path: the persisted-index
         # update reproduces the in-memory-index labels exactly.
         manifest = _min_label_components(
-            _jaccard_filtered(_pairs_from_bands(index, "doc_id")).select(
-                "id_a", "id_b"
-            ),
+            neardup_pairs(index, "doc_id").select("id_a", "id_b"),
             who="bucketed-roundtrip manifest",
         )
         upd_b = incremental_components_update(batch, idx_b, manifest)

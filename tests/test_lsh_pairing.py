@@ -1,11 +1,12 @@
-"""Property gate for the r5 LSH pairing reshape (dedup.lsh_candidate_pairs).
+"""Property gate for the near-dup pair kernel (dedup.neardup_pairs).
 
-The collect_list + in-bucket pair generation must emit EXACTLY the pair
-set the previous self-join formulation emitted: all (id_a < id_b) pairs
+The collect_list + in-bucket pair generation must emit EXACTLY the rows
+the previous self-join formulation emitted: all (id_a < id_b) pairs
 sharing at least one (band, bucket), excluding members of buckets wider
-than MAX_BUCKET. The reference here is an independent brute-force over
-the banded frame computed with plain DataFrame ops — no shared code
-path with the production pairing beyond ``_banded`` itself.
+than MAX_BUCKET, with signature-estimated Jaccard >= 0.5. The reference
+here is an independent brute-force over the banded frame computed with
+plain DataFrame ops — no shared code path with the production pairing
+beyond ``_banded`` and the estimator ``_sig_est`` itself.
 """
 
 from __future__ import annotations
@@ -17,13 +18,24 @@ from pyspark.sql import functions as F
 from ask_duckdb_spark.operators.dedup import (
     MAX_BUCKET,
     _banded,
-    lsh_candidate_pairs,
+    _sig_est,
     minhash_signatures,
+    neardup_pairs,
 )
 
 
-def _reference_pairs(sig, id_col: str):
-    """Self-join reference: the pre-r5 formulation, kept as the oracle."""
+def kernel_rows(sig) -> set:
+    """The kernel's (id_a, id_b, jaccard_est) rows over a doc_id
+    signature frame."""
+    return {
+        (r.id_a, r.id_b, r.jaccard_est)
+        for r in neardup_pairs(_banded(sig, "doc_id"), "doc_id").collect()
+    }
+
+
+def reference_rows(sig, id_col: str = "doc_id") -> set:
+    """Self-join reference: the pre-r5 formulation plus the estimate
+    threshold, kept as the oracle. (id_a, id_b, jaccard_est) rows."""
     bands = _banded(sig, id_col)
     counts = bands.groupBy("band", "bucket").count().filter(
         F.col("count") <= MAX_BUCKET
@@ -37,12 +49,18 @@ def _reference_pairs(sig, id_col: str):
         F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"),
         "band", "bucket",
     )
-    return (
+    df = (
         a.join(b, ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "sig_a", "sig_b")
+        .select(
+            "id_a",
+            "id_b",
+            _sig_est(F.col("sig_a"), F.col("sig_b")).alias("jaccard_est"),
+        )
+        .filter(F.col("jaccard_est") >= 0.5)
     )
+    return {(r.id_a, r.id_b, r.jaccard_est) for r in df.collect()}
 
 
 def _corpus(spark, seed: int, n_docs: int):
@@ -72,14 +90,8 @@ def test_pairing_matches_selfjoin_reference(spark):
     for seed in (7, 23, 91):
         docs = _corpus(spark, seed, 120)
         sig = minhash_signatures(docs, "doc_id", "text").persist()
-        got = {
-            (r.id_a, r.id_b)
-            for r in lsh_candidate_pairs(sig, "doc_id").collect()
-        }
-        want = {
-            (r.id_a, r.id_b)
-            for r in _reference_pairs(sig, "doc_id").collect()
-        }
+        got = kernel_rows(sig)
+        want = reference_rows(sig)
         sig.unpersist()
         assert got == want, f"seed {seed}: {got ^ want}"
         assert want, f"seed {seed}: vacuous reference pair set"
@@ -94,7 +106,7 @@ def test_pairing_drops_degenerate_buckets(spark):
         ["doc_id", "text"],
     )
     sig = minhash_signatures(clones, "doc_id", "text").persist()
-    assert lsh_candidate_pairs(sig, "doc_id").count() == 0
+    assert kernel_rows(sig) == set()
     sig.unpersist()
 
     few = spark.createDataFrame(
@@ -102,5 +114,5 @@ def test_pairing_drops_degenerate_buckets(spark):
         ["doc_id", "text"],
     )
     sig2 = minhash_signatures(few, "doc_id", "text").persist()
-    assert lsh_candidate_pairs(sig2, "doc_id").count() == 10  # C(5,2)
+    assert len(kernel_rows(sig2)) == 10  # C(5,2)
     sig2.unpersist()

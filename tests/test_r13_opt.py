@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ask_duckdb_spark.operators import QUERIES
 from ask_duckdb_spark.plans import checks
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_001
 
 
 def _broadcast_inputs(plan: str) -> list[str]:
@@ -45,31 +45,21 @@ def test_fact_table_never_broadcast(spark):
 
 
 def test_x2_est_early_path_matches_sig_carrying_path(spark):
-    """x2's r13 pair path (estimate computed inside the pair lambda,
-    scalar-only dedup) must produce exactly the rows of the reference
-    sig-carrying path (lsh_candidate_pairs -> zip_with estimate)."""
-    from ask_duckdb_spark.operators.dedup import (
-        _jaccard_filtered,
-        _neardup_pairs_from_signatures,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    """x2's pair kernel (estimate projected right after the pair
+    explode, threshold, scalar-only dedup) must produce exactly the
+    rows of the independent sig-carrying reference (bucket self-join,
+    dedup on the signatures, then estimate and threshold) on the sf0.01
+    documents."""
+    from ask_duckdb_spark.operators.dedup import minhash_signatures
+    from tests.test_lsh_pairing import kernel_rows, reference_rows
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+    docs = spark.read.parquet(f"{SF_DIR_001}/documents.parquet").select(
         "doc_id", "text"
     )
     sig = minhash_signatures(docs, "doc_id", "text").persist()
     try:
-        got = {
-            (r.id_a, r.id_b, r.jaccard_est)
-            for r in _neardup_pairs_from_signatures(sig).collect()
-        }
-        want = {
-            (r.id_a, r.id_b, r.jaccard_est)
-            for r in _jaccard_filtered(
-                lsh_candidate_pairs(sig, "doc_id")
-            ).collect()
-        }
+        got = kernel_rows(sig)
+        want = reference_rows(sig)
     finally:
         sig.unpersist()
     assert got == want

@@ -246,7 +246,9 @@ def test_x80_equals_x29_min_label(spark):
 def test_x80_chain_component(spark, tmp_path_factory):
     """A 4-doc chain a~b~c~d (adjacent overlap only) must collapse to
     ONE cluster labeled by the minimum doc id — the diameter-3 case
-    star contraction exists for."""
+    star contraction exists for. The chain's pair estimates (0.6875,
+    0.5625, 0.59375) sit just above the pair kernel's 0.5 cut, so a
+    threshold slip breaks the chain here."""
     base = [f"tok{i}" for i in range(30)]
     rows = []
     for i in range(4):
@@ -256,8 +258,8 @@ def test_x80_chain_component(spark, tmp_path_factory):
     _write_documents(spark, str(d), rows)
     out = QUERIES["x80_cc_star"](spark, str(d)).collect()
     clusters = {r.doc_id: r.cluster for r in out}
-    # every doc that appears must map to cluster 0 (transitive closure)
-    assert set(clusters.values()) <= {0}
+    # every doc maps to cluster 0 (transitive closure)
+    assert clusters == {0: 0, 1: 0, 2: 0, 3: 0}
 
 
 # ---------------------------------------------------------------------------

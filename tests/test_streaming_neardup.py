@@ -15,34 +15,26 @@ import os
 
 from pyspark.sql import functions as F
 
-from ask_duckdb_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_signatures_fast,
-)
+import pytest
+
+from ask_duckdb_spark.operators import QUERIES
 from ask_duckdb_spark.sources.catalog import load_table
-from ask_duckdb_spark.streaming.neardup import start_neardup_ingest
+from ask_duckdb_spark.streaming.neardup import (
+    neardup_ingest,
+    start_neardup_ingest,
+)
 from tests.conftest import SF_DIR_001
 
 
 def _batch_reference_kept(spark, docs) -> set[int]:
-    sig = minhash_signatures_fast(docs, "doc_id", "text").persist()
-    pairs = lsh_candidate_pairs(sig, "doc_id")
-    est = pairs.select(
-        "id_b",
-        (
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            )
-            / F.lit(32)
-        ).alias("est"),
-    )
+    """The batch rule over the registry's fast-path pairs (x2f): every
+    id_b of a pair is dropped."""
     dropped = {
-        r.id_b for r in est.filter(F.col("est") >= 0.5).distinct().collect()
+        r.id_b
+        for r in QUERIES["x2f_minhash_neardup_fast"](spark, SF_DIR_001)
+        .select("id_b")
+        .collect()
     }
-    sig.unpersist()
     return {r.doc_id for r in docs.select("doc_id").collect()} - dropped
 
 
@@ -93,3 +85,33 @@ def test_streaming_ingest_matches_batch_rule(spark, tmp_path):
         .collect()
     }
     assert store_ids == {r.doc_id for r in docs.select("doc_id").collect()}
+
+
+@pytest.mark.parametrize("junk", ["junk", "zz-junk"])
+def test_corrupt_store_raises_and_releases_cache(spark, tmp_path, junk):
+    """Only a MISSING band store reads as "no store yet". A store that
+    exists but cannot be read (one foreign file next to the parquet
+    parts) must raise — read as empty, it would silently keep an exact
+    copy of an earlier batch's document — and the batch's persisted
+    signatures must be released on that path. Parquet schema inference
+    reads the first file in path order: "junk" sorts before the
+    ``part-`` files and fails the store read; "zz-junk" sorts after, so
+    the read succeeds and the failure surfaces in the write job, after
+    the signature cache was built."""
+    text = " ".join(f"tok{i}" for i in range(30))
+
+    def doc(i):
+        return spark.createDataFrame([(i, text)], "doc_id long, text string")
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "kept")
+    neardup_ingest(spark, doc(1), store, out, batch_id=0)
+    # Control: against the clean store, a copy of doc 1 is dropped.
+    neardup_ingest(spark, doc(2), store, out, batch_id=1)
+    assert spark.read.parquet(f"{out}/batch_id=1").count() == 0
+
+    (tmp_path / "store" / junk).write_bytes(b"not a parquet file")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs  # noqa: SLF001
+    before = len(persisted())
+    with pytest.raises(Exception):
+        neardup_ingest(spark, doc(3), store, out, batch_id=2)
+    assert len(persisted()) == before
