@@ -54,21 +54,74 @@ SQL_KEYWORDS: frozenset[str] = frozenset(
 _FENCE_EXTRACT_RE = re.compile(r"```(.*?)\n(?P<code>.*?)\n```", re.DOTALL)
 _IDENT_RE = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\b")
 
-#: ONE left-to-right scan over string literals and comments. A single
-#: alternation is essential: separate literal/comment passes compose
-#: wrongly in either order (a ``--`` INSIDE a quoted literal would eat
-#: the rest of the statement, or a quote inside a comment would open a
-#: phantom literal).
-_LITERAL_OR_COMMENT_RE = re.compile(
-    r"'[^']*'|--[^\n]*|/\*.*?\*/", re.DOTALL
-)
+def _blank_literals_and_comments(sql: str) -> tuple[str, str]:
+    """SQL with string literals emptied (''), comments replaced by a
+    space and backticked identifiers kept verbatim — once as is, and
+    once with every closed optimizer hint (``/*+ ... */``) replaced by
+    a space too.
 
-
-def _blank_literals_and_comments(sql: str) -> str:
-    """SQL with literals emptied ('') and comments removed (space)."""
-    return _LITERAL_OR_COMMENT_RE.sub(
-        lambda m: "''" if m.group(0).startswith("'") else " ", sql
-    )
+    ONE left-to-right scan that reads quotes and comments the way
+    Spark's lexer does, so nothing blanked here can run: backslash
+    escapes (``'\\''`` is one literal) except in ``r'...'`` raw strings
+    (the ``r`` is blanked with its literal), double-quoted strings,
+    ``--`` comments ending at CR or at an LF without a backslash before
+    it, nested ``/* /* */ */`` comments in which ``/*+`` opens no level,
+    hints ending at their first ``*/`` outside literals. Any
+    disagreement with Spark would let a phantom literal hide real code
+    from the checks; a single scan is essential too — separate
+    literal/comment passes compose wrongly in either order (a ``--``
+    INSIDE a literal would eat the rest of the statement, or a quote
+    inside a comment would open a phantom literal)."""
+    out: list[str] = []
+    hints: list[tuple[int, int]] = []  # closed hints, as slices of out
+    hint_at = None  # where in out the open hint starts
+    i, n = 0, len(sql)
+    while i < n:
+        c = sql[i]
+        if c in "'\"`":
+            # r'...' is raw (no escapes) unless the r ends an identifier
+            raw = c != "`" and sql[i - 1 : i] in ("r", "R") and not (
+                sql[i - 2 : i - 1].isalnum() or sql[i - 2 : i - 1] == "_"
+            )
+            j = i + 1
+            while j < n and sql[j] != c:
+                j += 2 if sql[j] == "\\" and c != "`" and not raw else 1
+            if raw:
+                out.pop()  # the r, kept as plain text one step earlier
+            # a doubled backtick reads as two adjacent identifiers here:
+            # both are kept verbatim, so the output is the same
+            out.append(sql[i : j + 1] if c == "`" else "''")
+            i = j + 1
+        elif sql.startswith("--", i):
+            while i < n and (
+                sql[i] not in "\r\n" or sql[i - 1 : i + 1] == "\\\n"
+            ):
+                i += 1
+            out.append(" ")
+        elif sql.startswith("/*+", i):
+            hint_at = len(out) if hint_at is None else hint_at
+            out.append("/*+")
+            i += 3
+        elif sql.startswith("*/", i) and hint_at is not None:
+            out.append("*/")
+            hints.append((hint_at, len(out)))
+            hint_at, i = None, i + 2
+        elif sql.startswith("/*", i):
+            depth, i = 1, i + 2
+            while i < n and depth:
+                step = sql[i : i + 2]
+                opens = step == "/*" and sql[i + 2 : i + 3] != "+"
+                depth += opens - (step == "*/")
+                i += 2 if step in ("/*", "*/") else 1
+            out.append(" ")
+        else:
+            out.append(c)
+            i += 1
+    bare, last = [], 0
+    for a, b in hints:
+        bare += out[last:a] + [" "]
+        last = b
+    return "".join(out), "".join(bare + out[last:])
 
 
 # --------------------------------------------------------------------------
@@ -267,6 +320,20 @@ _MUTATION_RE = re.compile(
     re.IGNORECASE,
 )
 
+#: Statement parts that run code outside the query — static JVM
+#: methods (``java_method('java.lang.System', 'exit', 0)``, also as
+#: ``reflect``/``try_reflect``), the IDENTIFIER clause (its computed
+#: name can spell them: ``IDENTIFIER('java_' || 'method')(...)``), and
+#: script transforms (``TRANSFORM(a) USING 'sh ...'``, a literal after
+#: USING). Matched as CALLS, so a column named ``reflect`` still reads;
+#: the word boundary after a backtick or qualifier dot catches
+#: ```java_method`(`` and ``system.builtin.reflect(``.
+_CODE_EXEC_RE = re.compile(
+    r"\b(?:reflect|java_method|try_reflect|identifier)\b`?\s*\("
+    r"|\busing\s*''",
+    re.IGNORECASE,
+)
+
 #: Prefixes whose statements may legitimately CONTAIN mutation words
 #: without executing them (SHOW CREATE TABLE, EXPLAIN INSERT analyzes
 #: but never runs the write).
@@ -276,14 +343,16 @@ _INTROSPECTION_PREFIXES = ("show", "describe", "explain")
 def ensure_readonly(sql: str) -> None:
     """Raise ValueError unless the statement is a read-only query.
 
-    Two layers over ONE literal/comment-aware scan: (1) the first real
-    token must be a query prefix; (2) for executable query prefixes, no
-    mutation keyword may appear anywhere outside string literals and
-    comments — catching WITH-prefixed DML. Biased toward safety: a
-    SELECT whose *identifier* is literally named ``update`` is rejected
-    (rename it); data values and comments never trip the gate.
+    Three layers over ONE literal/comment-aware scan: (1) the first real
+    token must be a query prefix; (2) nothing that runs code outside the
+    query (JVM reflection, IDENTIFIER clauses, script transforms)
+    may appear outside string literals and comments; (3) for executable
+    query prefixes, no mutation keyword may appear there either —
+    catching WITH-prefixed DML. Biased toward safety: a SELECT whose
+    *identifier* is literally named ``update`` is rejected (rename it);
+    data values and comments never trip the gate.
     """
-    cleaned = _blank_literals_and_comments(sql)
+    cleaned, outside_hints = _blank_literals_and_comments(sql)
     # First KEYWORD, not first whitespace token: skip opening parens
     # (``(SELECT ...) UNION ...``) and compare by EQUALITY — a prefix
     # match would wave through any token merely *beginning* with an
@@ -292,16 +361,23 @@ def ensure_readonly(sql: str) -> None:
     # the token pattern must consume trailing digits/underscores so
     # 'show1'/'explain2' capture whole (and fail the equality check)
     # instead of capturing the bare keyword and skipping the scan
-    m = re.match(r"[\s(]*([A-Za-z_][A-Za-z0-9_]*)", cleaned)
+    m = re.match(r"[\s(]*([A-Za-z_][A-Za-z0-9_]*)", outside_hints)
     first = m.group(1).lower() if m else ""
     if first not in _READONLY_KEYWORDS:
         raise ValueError(
             f"read-only violation: statement starts with {first!r}; "
             "only SELECT/WITH/VALUES/EXPLAIN/DESCRIBE/SHOW are allowed"
         )
+    m = _CODE_EXEC_RE.search(cleaned)
+    if m:
+        raise ValueError(
+            f"read-only violation: statement contains {m.group(0)!r}"
+        )
     if first in _INTROSPECTION_PREFIXES:
         return  # SHOW CREATE TABLE etc: mutation words are display-only
-    m = _MUTATION_RE.search(cleaned)
+    # hints stay in the code scan (their arguments are expressions) but
+    # not in this one: /*+ MERGE(a) */ is a join strategy
+    m = _MUTATION_RE.search(outside_hints)
     if m:
         raise ValueError(
             f"read-only violation: statement contains {m.group(0)!r}"

@@ -350,6 +350,68 @@ def neardup_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of an undirected pair list ``(id_a, id_b)``
+    → ``(v, label)`` per vertex, label = the component's minimum id —
+    the one components kernel behind x29, x80, x85, x96, x139, x140
+    and :func:`incremental_components_update`.
+
+    Min-label propagation to fixpoint: each round, every vertex takes
+    the minimum label in its closed neighborhood (one join + one
+    aggregate), then a count of changed labels decides whether to go
+    on. It terminates on every input: a round either changes no label
+    (the exit) or lowers at least one label to a smaller id of the same
+    component, so the round count is at most the largest component's
+    diameter + 1 — ≤3 rounds on the fixtures' near-dup clusters, but
+    O(n) on an n-vertex path (the trade made for one kernel instead of
+    a second, O(log n)-round star-contraction one)."""
+    # symmetric edge list (+ self-loops keep isolated pair-members)
+    edges = pairs.union(
+        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    ).persist()
+    labels = (
+        edges.select(F.col("id_a").alias("v"))
+        .distinct()
+        .withColumn("label", F.col("v"))
+    )
+    while True:
+        neighbor_min = (
+            edges.join(labels, edges.id_b == labels.v)
+            .groupBy("id_a")
+            .agg(F.min("label").alias("nmin"))
+        )
+        new_labels = (
+            labels.join(neighbor_min, labels.v == neighbor_min.id_a, "left")
+            .select(
+                "v",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
+                ).alias("label"),
+            )
+            # A local checkpoint, not persist: persist caches DATA but the
+            # logical plan still nests every prior round, so plan depth
+            # (and any plan-string or plan-tree traversal) grows per round —
+            # the long-session pathology DIFFCHECK_r05 documents.
+            # Checkpointing truncates lineage to the materialized
+            # blocks. In a multi-executor deployment prefer a reliable
+            # checkpoint dir (survives executor loss); local is right
+            # for this single-JVM harness.
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "v")
+            .filter(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        prev, labels = labels, new_labels
+        prev.unpersist()  # no-op once prev is a checkpointed frame
+        if changed == 0:
+            break
+    edges.unpersist()
+    return labels
+
+
 #: DuckDB twin of functions/text.tokens() — whitespace tokens of the
 #: lowercased text, empties dropped (same fragment as x22's oracle).
 _TOKENS_SQL = r"list_filter(string_split_regex(lower(text), '[ \t\n\r\x0B\f]+'), t -> t <> '')"
@@ -648,8 +710,7 @@ def x3_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every label reachable from v over the symmetric edge set (UNION
 # dedup terminates the recursion on cyclic graphs), then min(l)
 # per vertex IS the connected component — the declarative twin of
-# BOTH Spark-side algorithms (x29 min-label propagation and x80
-# large-star/small-star), which compute the same clusters.
+# the Spark-side kernel (connected_components' min-label propagation).
 # ORACLE-SIZE ASSUMPTION (ADVICE r4): reach materializes one row
 # per (vertex, reachable vertex) = O(sum of component size^2).
 # Fine while the fixtures' near-dup clusters stay small (pairs/
@@ -674,85 +735,17 @@ _CC_ORACLE = f"""
     """
 
 
-def _min_label_components(pairs: DataFrame, who: str = "x29") -> DataFrame:
-    """Min-label propagation to fixpoint over an undirected pair list
-    ``(id_a, id_b)`` → ``(v, label)`` per vertex. Pure code motion from
-    x29 (r02, driver-green) so x140's incremental path runs the EXACT
-    same kernel; each round is one join + one aggregate, convergence is
-    a cheap count, and an unconverged exit RAISES instead of silently
-    returning split components."""
-    # symmetric edge list (+ self-loops keep isolated pair-members)
-    edges = pairs.union(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    labels = (
-        edges.select(F.col("id_a").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-    )
-    converged = False
-    for _ in range(25):  # label propagation needs one round per hop
-        neighbor_min = (
-            edges.join(labels, edges.id_b == labels.v)
-            .groupBy("id_a")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.v == neighbor_min.id_a, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            # localCheckpoint, not persist: persist caches DATA but the
-            # logical plan still nests every prior round, so plan depth
-            # (and any plan-string/driver traversal) grows per round —
-            # the long-session pathology DIFFCHECK_r05 documents.
-            # Checkpointing truncates lineage to the materialized
-            # blocks. In a multi-executor deployment prefer a reliable
-            # checkpoint dir (survives executor loss); local is right
-            # for this single-JVM harness.
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        prev, labels = labels, new_labels
-        prev.unpersist()  # no-op once prev is a checkpointed frame
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        labels.unpersist()  # don't leak the last round's cache on error
-        raise RuntimeError(
-            f"{who} label propagation did not converge in 25 rounds —"
-            " a component with diameter > 25 (pathological chain);"
-            " raise the cap or pre-contract the graph"
-        )
-    return labels
-
-
 @query("x29_dedup_clusters", oracle=_CC_ORACLE)
 def x29_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over x2's pair graph.
 
-    Iterative min-label propagation (each vertex takes the minimum
-    label in its neighborhood) run to fixpoint — the distributed
-    connected-components algorithm that turns pairwise near-dup edges
-    into transitive clusters, so chains a→b→c dedup to ONE canonical
-    doc where pair-based filtering (x24) would keep two. Each round is
-    one join + one aggregate on (vertex, label) pairs; convergence is
-    checked with a cheap count, and an unconverged exit RAISES instead
-    of silently returning split components (the cap only bounds
-    pathological chains — the fixture converges in ≤3 rounds).
+    Min-label propagation to fixpoint (:func:`connected_components`)
+    turns pairwise near-dup edges into transitive clusters, so chains
+    a→b→c dedup to ONE canonical doc where pair-based filtering (x24)
+    would keep two. The fixture converges in ≤3 rounds.
     """
     pairs = x2_minhash_neardup(spark, sf_dir).select("id_a", "id_b")
-    labels = _min_label_components(pairs, who="x29")
+    labels = connected_components(pairs)
     return labels.select(
         F.col("v").alias("doc_id"), F.col("label").alias("cluster")
     ).orderBy("doc_id")
@@ -1533,128 +1526,14 @@ def x74_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unpersist_with(result, sh)
 
 
-# ---------------------------------------------------------------------------
-# x80: connected components via alternating large-star / small-star
-# (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
-# x29's min-label propagation needs O(component diameter) rounds — fine
-# for near-dup clusters (diameter 2-3), fatal on chain-shaped graphs. The
-# star algorithm converges in O(log n) rounds regardless of diameter:
-# the 100 TB default whenever the component shape is unknown.
-# ---------------------------------------------------------------------------
-
-CC_MAX_ROUNDS = 20  # ~log2(vertices) + slack; raises on non-convergence
-
-
-def _large_star(sym: DataFrame) -> DataFrame:
-    """LS: for each u, connect every LARGER neighbor to m = min(N(u)+{u}).
-
-    Input/output are directed (u, v) frames; input must be symmetric.
-    """
-    mi = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    m = F.least(F.col("mv"), F.col("u"))
-    # No distinct here: duplicates are harmless to the next stage's
-    # min-aggregates and each distinct is a shuffle per round.
-    return (
-        sym.join(mi, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), m.alias("v"))
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """SS: for each u, connect every SMALLER-or-self node to the min.
-
-    Normalizes to (big, small) first; emits (v, m) for v in N(u)+{u},
-    v != m. Output is the star-edge frame (child -> tentative root).
-    """
-    # No distinct on d: min-aggregation and the output distinct absorb
-    # duplicates; dropping it saves a shuffle per round.
-    d = e.filter(F.col("u") != F.col("v")).select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    mi = d.groupBy("u").agg(F.min("v").alias("mv"))
-    rewired = (
-        d.join(mi, "u")
-        .filter(F.col("v") != F.col("mv"))
-        .select(F.col("v").alias("u"), F.col("mv").alias("v"))
-    )
-    selfed = mi.select("u", F.col("mv").alias("v"))
-    return rewired.union(selfed).distinct()
-
-
 @query("x80_cc_star", oracle=_CC_ORACLE)
 def x80_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of x2's near-dup graph, star-contraction.
-
-    Alternates large-star (hang big neighbors off each neighborhood
-    min) and small-star (point small neighbors at the min) until the
-    edge set reaches a fixpoint — at which point every component is a
-    star centered at its global minimum, and the star edges ARE the
-    (doc_id, cluster) assignment. Same output contract and same
-    recursive-CTE oracle as x29; the pytest gate additionally asserts
-    x80 == x29 row-for-row on the fixtures.
-
-    Scale (100 TB): each round is two keyed shuffles of the CURRENT
-    edge frame (which only shrinks toward one edge per vertex) — and
-    the round count is O(log n) in the vertex count, independent of
-    component diameter, vs x29's O(diameter). On web-scale dedup
-    graphs, boilerplate chains routinely have diameters in the
-    hundreds; this is the variant that terminates there. Convergence
-    is detected with one (count, hash-sum) checksum job per round on
-    the cached frame; non-convergence inside CC_MAX_ROUNDS raises
-    rather than returning split components.
-    """
-    pairs = x2_minhash_neardup(spark, sf_dir).select("id_a", "id_b")
-    e = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    def _checksum(df: DataFrame) -> tuple:
-        # (count, sum of row hashes): equal checksums on equal-count
-        # edge sets mean a fixpoint up to a 2^-64 hash-cancellation —
-        # one single-stage job on the cached frame vs an anti-join
-        # (~2 s/round of probe cost at any input size). A false
-        # "stable" would surface immediately in the oracle gate.
-        row = df.agg(
-            F.count("*").alias("n"), F.sum(F.xxhash64("u", "v")).alias("h")
-        ).collect()[0]
-        return (row.n, row.h)
-
-    converged = False
-    prev_cs = _checksum(e)
-    for _ in range(CC_MAX_ROUNDS):
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # lineage truncation per round (see x29): persist alone leaves
-        # the plan nesting all prior rounds
-        nxt = _small_star(_large_star(sym)).localCheckpoint(eager=True)
-        cs = _checksum(nxt)
-        e.unpersist()
-        e = nxt
-        if cs == prev_cs:
-            converged = True
-            break
-        prev_cs = cs
-    if not converged:
-        e.unpersist()
-        raise RuntimeError(
-            f"x80 star contraction did not converge in {CC_MAX_ROUNDS} "
-            "rounds — raise CC_MAX_ROUNDS (needs ~log2 |V|)"
-        )
-    # Fixpoint edges are (child -> root) stars; the roots themselves
-    # never appear on the child side, so union in their self-rows.
-    children = e.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("cluster")
-    )
-    roots = e.select(
-        F.col("v").alias("doc_id"), F.col("v").alias("cluster")
-    ).distinct()
-    return children.union(roots).distinct().orderBy("doc_id")
+    """x29's clusters (same kernel), kept under its own registry name."""
+    return x29_dedup_clusters(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
-# x85: cluster canonicalization — the dedup pipeline's LAST step. x80
+# x85: cluster canonicalization — the dedup pipeline's LAST step. x29
 # gives components; a keep POLICY picks one representative per cluster.
 # Min-id (x29/x24's implicit policy) is arbitrary; real pipelines keep
 # the highest-QUALITY member (the cleanest crawl of a mirrored page).
@@ -1699,7 +1578,7 @@ _X85_SCORE_SQL = f"""
 def x85_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the highest-quality member of every near-dup cluster.
 
-    Composes the pipeline end-to-end: x80's star-contraction components
+    Composes the pipeline end-to-end: x29's connected components
     (docs outside the pair graph become their own singleton cluster),
     the x78 quality score (ROUNDed before comparison so both engines
     rank identically, doc_id tiebreak), and an argmax-per-cluster
@@ -1723,7 +1602,7 @@ def x85_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    cc = x80_cc_star(spark, sf_dir)
+    cc = x29_dedup_clusters(spark, sf_dir)
     lab = scored.join(cc, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster", "doc_id").alias("cluster"),
@@ -2059,8 +1938,8 @@ def x96_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (100 TB): the only additions over x29 are one doc_id-keyed
     left join against the full corpus and a narrow hash map — both
-    linear; the split hash itself is shuffle-free. x29/x80 bear the
-    component cost (measured log-round at 100x, SCALE.md).
+    linear; the split hash itself is shuffle-free. x29's kernel bears
+    the component cost.
     """
     d = load_table(spark, sf_dir, "documents")
     cc = x29_dedup_clusters(spark, sf_dir).select("doc_id", "cluster")
@@ -2201,11 +2080,10 @@ def x139_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic near-dups; mass at large sizes = boilerplate floods worth
     a domain-cap (x51) instead.
 
-    Scale (100 TB): x29/x80 bear the heavy lifting (banded LSH + O(log
-    V) star-contraction, both driver-green at scale posture); this
-    rollup adds one token-count scan, a cluster-keyed combinable
-    aggregate bounded by |non-singleton docs|, and a |distinct sizes|-
-    row histogram. All exact integers, hash-exact.
+    Scale (100 TB): x29 bears the heavy lifting (banded LSH + min-label
+    propagation, O(component diameter) rounds); this rollup adds one
+    token-count scan, a cluster-keyed combinable aggregate bounded by
+    |non-singleton docs|, and a |distinct sizes|-row histogram. All exact integers, hash-exact.
     """
     cc = x29_dedup_clusters(spark, sf_dir).select("doc_id", "cluster")
     d = load_table(spark, sf_dir, "documents")
@@ -2274,7 +2152,7 @@ def x140_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute and the SAME oracle pins both (x125↔x129 discipline, on
     an algorithm rather than a plan).
 
-    Scale (100 TB): a full x29/x80 recompute touches every pair ever
+    Scale (100 TB): a full x29 recompute touches every pair ever
     found; this touches O(|manifest| + |new edges|) — the manifest is
     one row per clustered doc (read from storage in production;
     rebuilt here only because registry entries own no persisted
@@ -2313,20 +2191,17 @@ def x140_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = pairs.filter(
         (F.col("id_a") >= F.col("c")) | (F.col("id_b") >= F.col("c"))
     ).select("id_a", "id_b")
-    # Kernel failure (25-round non-convergence RuntimeError) must not
-    # leak `pairs`' cache blocks for the session's lifetime — the
-    # ADVICE-r5 pathology unpersist_with exists to prevent (ADVICE r8);
-    # the kernel already unpersists its own frames on that path.
+    # A Spark failure inside the kernel must not leak `pairs`' cache
+    # blocks for the session's lifetime — the ADVICE-r5 pathology
+    # unpersist_with exists to prevent (ADVICE r8).
     try:
         # The persisted state a real pipeline reads back: (doc, cluster).
-        manifest = _min_label_components(old, who="x140 manifest")
+        manifest = connected_components(old)
         # Star contraction of every old component: member -> label edges.
         star = manifest.filter(F.col("v") != F.col("label")).select(
             F.col("v").alias("id_a"), F.col("label").alias("id_b")
         )
-        updated = _min_label_components(
-            new.unionAll(star), who="x140 incremental"
-        )
+        updated = connected_components(new.unionAll(star))
     except Exception:
         pairs.unpersist()
         raise
@@ -2527,10 +2402,10 @@ def incremental_components_update(
             F.coalesce(F.col("_lb"), F.col("id_b")).alias("id_b"),
         )
     )
+    # A Spark failure inside the kernel must not leak the three frames
+    # persisted above.
     try:
-        small = _min_label_components(
-            contracted, who="incremental_components_update"
-        )
+        small = connected_components(contracted)
     except Exception:
         bands_new.unpersist()
         new_edges.unpersist()

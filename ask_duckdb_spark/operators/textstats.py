@@ -2515,7 +2515,7 @@ def x82_source_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x83: the SCALE PATH for x81 — budget selection via a score-histogram
 # cutoff instead of a global window. Same output contract, same oracle;
 # the pytest gate asserts row-identical results vs x81, the twin pattern
-# of x29<->x80 and x62<->x63.
+# of x62<->x63.
 # ---------------------------------------------------------------------------
 
 

@@ -47,8 +47,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from ask_duckdb_spark.operators.dedup import (  # noqa: E402
     MAX_BUCKET,
     _banded,
-    _min_label_components,
     banded_signature_index,
+    connected_components,
     incremental_components_update,
     minhash_signatures,
     neardup_pairs,
@@ -120,7 +120,7 @@ def main() -> int:
     old = all_pairs.filter(
         (F.col("id_a") < F.col("c")) & (F.col("id_b") < F.col("c"))
     ).select("id_a", "id_b")
-    manifest = _min_label_components(old, who="x140-trial manifest")
+    manifest = connected_components(old)
     manifest.write.mode("overwrite").parquet(manifest_pq)
     n_manifest = spark.read.parquet(manifest_pq).count()
     print(f"manifest build + persist: {time.time() - t0:.1f}s "
@@ -130,7 +130,7 @@ def main() -> int:
         spark.catalog.clearCache()
         t0 = time.time()
         p = spark.read.parquet(pairs_pq)
-        out = _min_label_components(p, who="x140-trial full")
+        out = connected_components(p)
         n = out.count()
         out.unpersist()
         return time.time() - t0, n
@@ -146,17 +146,13 @@ def main() -> int:
         star = m.filter(F.col("v") != F.col("label")).select(
             F.col("v").alias("id_a"), F.col("label").alias("id_b")
         )
-        out = _min_label_components(
-            new.unionAll(star), who="x140-trial incremental"
-        )
+        out = connected_components(new.unionAll(star))
         n = out.count()
         out.unpersist()
         return time.time() - t0, n
 
     # row-identity gate BEFORE timing (and a warm-up for both paths)
-    full_out = _min_label_components(
-        spark.read.parquet(pairs_pq), who="x140-trial identity-full"
-    )
+    full_out = connected_components(spark.read.parquet(pairs_pq))
     inc_pairs = spark.read.parquet(pairs_pq).crossJoin(F.broadcast(cut))
     inc_new = inc_pairs.filter(
         (F.col("id_a") >= F.col("c")) | (F.col("id_b") >= F.col("c"))
@@ -164,9 +160,7 @@ def main() -> int:
     inc_star = spark.read.parquet(manifest_pq).filter(
         F.col("v") != F.col("label")
     ).select(F.col("v").alias("id_a"), F.col("label").alias("id_b"))
-    inc_out = _min_label_components(
-        inc_new.unionAll(inc_star), who="x140-trial identity-inc"
-    )
+    inc_out = connected_components(inc_new.unionAll(inc_star))
     n_diff = (
         full_out.withColumnRenamed("label", "fl")
         .join(inc_out.withColumnRenamed("label", "il"), "v", "full")
@@ -258,7 +252,7 @@ def main() -> int:
     old_edges = neardup_pairs(spark.table(idx_table), "doc_id").select(
         "id_a", "id_b"
     )
-    m_e2e = _min_label_components(old_edges, who="x140-trial manifest-e2e")
+    m_e2e = connected_components(old_edges)
     m_e2e.write.mode("overwrite").parquet(manifest_e2e_pq)
     m_e2e.unpersist()
     n_manifest_e2e = spark.read.parquet(manifest_e2e_pq).count()
@@ -300,7 +294,7 @@ def main() -> int:
         spark.catalog.clearCache()
         t0 = time.time()
         edges = x2_minhash_neardup(spark, args.workdir).select("id_a", "id_b")
-        out = _min_label_components(edges, who="x140-trial full-e2e")
+        out = connected_components(edges)
         n = out.count()
         out.unpersist()
         return time.time() - t0, n
@@ -328,9 +322,8 @@ def main() -> int:
         return time.time() - t0, n
 
     # end-to-end row-identity gate (also warms both paths)
-    full_lab = _min_label_components(
-        x2_minhash_neardup(spark, args.workdir).select("id_a", "id_b"),
-        who="x140-trial identity-full-e2e",
+    full_lab = connected_components(
+        x2_minhash_neardup(spark, args.workdir).select("id_a", "id_b")
     )
     inc_lab = _incremental_labels()
     n_diff = (

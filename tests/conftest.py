@@ -33,3 +33,23 @@ def queuedata(spark):
     df = queuedata_df(spark)
     df.createOrReplaceTempView("queuedata")
     return df, queuedata_dictionary()
+
+
+def union_find_labels(pairs) -> dict[int, int]:
+    """{vertex: min vertex id of its component} over undirected
+    ``(a, b)`` pairs by sequential union-find — the reference every
+    connected-components result in the suite is checked against."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}

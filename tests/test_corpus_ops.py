@@ -272,8 +272,8 @@ def test_incremental_components_update_library_path(spark):
 
     from ask_duckdb_spark.operators import QUERIES
     from ask_duckdb_spark.operators.dedup import (
-        _min_label_components,
         banded_signature_index,
+        connected_components,
         incremental_components_update,
         neardup_pairs,
     )
@@ -293,7 +293,7 @@ def test_incremental_components_update_library_path(spark):
     # connectivity the cap caveat is about — this is the state a
     # production pipeline actually owns.
     old_pairs = neardup_pairs(index, "doc_id").select("id_a", "id_b")
-    manifest = _min_label_components(old_pairs, who="test manifest")
+    manifest = connected_components(old_pairs)
 
     upd = incremental_components_update(batch, index, manifest)
     got = sorted((r.v, r.label) for r in upd.collect())
@@ -322,8 +322,8 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
     while the batch doc S+A+B reads ~ 0.65 / 0.56 against them (edges
     to both)."""
     from ask_duckdb_spark.operators.dedup import (
-        _min_label_components,
         banded_signature_index,
+        connected_components,
         incremental_components_update,
         neardup_pairs,
     )
@@ -339,9 +339,8 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
     batch = spark.createDataFrame([(100, z)], "doc_id long, text string")
 
     index = banded_signature_index(old)
-    manifest = _min_label_components(
-        neardup_pairs(index, "doc_id").select("id_a", "id_b"),
-        who="merge-test manifest",
+    manifest = connected_components(
+        neardup_pairs(index, "doc_id").select("id_a", "id_b")
     )
     man = {r.v: r.label for r in manifest.collect()}
     # Precondition: exactly the two intended old components.
@@ -354,11 +353,10 @@ def test_incremental_merges_old_components_through_batch_doc(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 100: 1}, got
 
     # And the answer is identical to a full recompute over old ∪ batch.
-    full = _min_label_components(
+    full = connected_components(
         neardup_pairs(
             banded_signature_index(old.unionByName(batch)), "doc_id"
-        ).select("id_a", "id_b"),
-        who="merge-test full",
+        ).select("id_a", "id_b")
     )
     want = {r.v: r.label for r in full.collect()}
     full.unpersist()
@@ -381,8 +379,8 @@ def test_incremental_cap_boundary_divergence(spark):
     from ask_duckdb_spark.operators.dedup import (
         MAX_BUCKET,
         _banded,
-        _min_label_components,
         banded_signature_index,
+        connected_components,
         incremental_components_update,
         minhash_signatures,
         neardup_pairs,
@@ -402,7 +400,7 @@ def test_incremental_cap_boundary_divergence(spark):
     # members — at the cap, kept — so the old docs form one component.
     index = banded_signature_index(old)
     old_edges = neardup_pairs(index, "doc_id").select("id_a", "id_b")
-    manifest = _min_label_components(old_edges, who="cap-boundary manifest")
+    manifest = connected_components(old_edges)
     man_rows = sorted((r.v, r.label) for r in manifest.collect())
     assert len(man_rows) == n_old
     assert {label for _, label in man_rows} == {0}
@@ -434,8 +432,8 @@ def test_incremental_update_rejects_reingested_ids(spark):
     from pyspark.sql import functions as F
 
     from ask_duckdb_spark.operators.dedup import (
-        _min_label_components,
         banded_signature_index,
+        connected_components,
         incremental_components_update,
         neardup_pairs,
     )
@@ -447,9 +445,8 @@ def test_incremental_update_rejects_reingested_ids(spark):
     ).first().c
     old_docs = d.filter(F.col("doc_id") < cut)
     index = banded_signature_index(old_docs)
-    manifest = _min_label_components(
-        neardup_pairs(index, "doc_id").select("id_a", "id_b"),
-        who="reingest-guard manifest",
+    manifest = connected_components(
+        neardup_pairs(index, "doc_id").select("id_a", "id_b")
     )
     # A "batch" that re-ingests existing docs violates the contract.
     stale_batch = old_docs.limit(3)
@@ -491,8 +488,8 @@ def test_banded_index_bucketed_probe_exchange_free(spark):
 
     from ask_duckdb_spark.operators.dedup import (
         _banded,
-        _min_label_components,
         banded_signature_index,
+        connected_components,
         incremental_components_update,
         minhash_signatures,
         neardup_pairs,
@@ -570,9 +567,8 @@ def test_banded_index_bucketed_probe_exchange_free(spark):
 
         # End-to-end through the library path: the persisted-index
         # update reproduces the in-memory-index labels exactly.
-        manifest = _min_label_components(
-            neardup_pairs(index, "doc_id").select("id_a", "id_b"),
-            who="bucketed-roundtrip manifest",
+        manifest = connected_components(
+            neardup_pairs(index, "doc_id").select("id_a", "id_b")
         )
         upd_b = incremental_components_update(batch, idx_b, manifest)
         got = sorted((r.v, r.label) for r in upd_b.collect())

@@ -139,9 +139,9 @@ def test_operators_build_without_materializing(spark, monkeypatch):
     ):
         monkeypatch.setattr(DataFrame, kind, _trip(kind))
     # x7 additionally allowed: its ADVICE-r4 cap warning is a bounded
-    # LIMIT-1 existence probe (stat-pruned), not a scan. x80 (and x85,
-    # which composes it) joins x29 in the iterative class: its
-    # large-star/small-star loop runs per-round convergence checksums
+    # LIMIT-1 existence probe (stat-pruned), not a scan. x80 and x85
+    # join x29 in the iterative class: both run x29's connected-
+    # components fixpoint loop, whose per-round convergence count runs
     # at build by nature.
     for name, fn in QUERIES.items():
         if name in (

@@ -17,7 +17,7 @@ import math
 import pytest
 
 from ask_duckdb_spark.operators import QUERIES
-from tests.conftest import SF_DIR, SF_DIR_001
+from tests.conftest import SF_DIR, SF_DIR_001, union_find_labels
 
 
 def _write_documents(spark, tmpdir: str, rows: list[tuple[int, str, str]]):
@@ -227,28 +227,29 @@ def test_x79_monotone_and_exact_tail(spark):
 
 
 # ---------------------------------------------------------------------------
-# x80 — star-contraction connected components
+# x80 — connected components (x29's kernel under the x80 name)
 # ---------------------------------------------------------------------------
 
 
 def test_x80_equals_x29_min_label(spark):
-    """Both CC algorithms must produce identical (doc_id, cluster)
-    assignments on the fixture near-dup graph."""
-    star = sorted(
-        map(tuple, QUERIES["x80_cc_star"](spark, SF_DIR_001).collect())
-    )
-    prop = sorted(
-        map(tuple, QUERIES["x29_dedup_clusters"](spark, SF_DIR_001).collect())
-    )
-    assert star == prop
+    """x80's (doc_id, cluster) rows must be exactly the components a
+    sequential union-find finds over x2's near-dup pairs."""
+    pairs = [
+        (r.id_a, r.id_b)
+        for r in QUERIES["x2_minhash_neardup"](spark, SF_DIR_001).collect()
+    ]
+    rows = QUERIES["x80_cc_star"](spark, SF_DIR_001).collect()
+    want = union_find_labels(pairs)
+    assert [(r.doc_id, r.cluster) for r in rows] == sorted(want.items())
+    assert want  # the fixture graph is not empty
 
 
 def test_x80_chain_component(spark, tmp_path_factory):
     """A 4-doc chain a~b~c~d (adjacent overlap only) must collapse to
-    ONE cluster labeled by the minimum doc id — the diameter-3 case
-    star contraction exists for. The chain's pair estimates (0.6875,
-    0.5625, 0.59375) sit just above the pair kernel's 0.5 cut, so a
-    threshold slip breaks the chain here."""
+    ONE cluster labeled by the minimum doc id — a diameter-3
+    component. The chain's pair estimates (0.6875, 0.5625, 0.59375)
+    sit just above the pair kernel's 0.5 cut, so a threshold slip
+    breaks the chain here."""
     base = [f"tok{i}" for i in range(30)]
     rows = []
     for i in range(4):

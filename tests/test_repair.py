@@ -199,7 +199,38 @@ def test_readonly_allows_queries():
      "DELETE FROM t", "CREATE TABLE t (a int)", "SET spark.x=1",
      # WITH-prefixed DML must not slip past the prefix gate
      "WITH x AS (SELECT 1) INSERT INTO t SELECT * FROM x",
-     "WITH x AS (SELECT 1) DELETE FROM t WHERE a IN (SELECT * FROM x)"],
+     "WITH x AS (SELECT 1) DELETE FROM t WHERE a IN (SELECT * FROM x)",
+     # static JVM method calls run arbitrary Java (System.exit, ...)
+     "SELECT java_method('java.lang.System','setProperty','adbs.probe','x')",
+     "SELECT reflect('java.lang.System', 'exit', 0)",
+     "SELECT try_reflect('java.lang.System', 'exit', 0)",
+     "select JAVA_METHOD /* c */ ('java.lang.System', 'exit', 0)",
+     "SELECT `java_method`('java.lang.System', 'exit', 0)",
+     "SELECT system.builtin.reflect('java.lang.System', 'exit', 0)",
+     "SELECT `system`.`builtin`.`try_reflect`('java.lang.System', 'exit', 0)",
+     "WITH x AS (SELECT 1) SELECT reflect('java.lang.System', 'exit', 0) FROM x",
+     "EXPLAIN SELECT java_method('java.lang.System', 'exit', 0)",
+     # a computed function name, and a shell command via script transform
+     "SELECT IDENTIFIER('java_' || 'method')('java.lang.System', 'exit', 0)",
+     "SELECT TRANSFORM(a) USING 'sh -c id' AS (b) FROM t",
+     # quoting and comments as Spark's lexer reads them, so no phantom
+     # literal can hide the call: escaped quote, double-quoted string,
+     # quote in a backticked name, nested comment, raw string, CR
+     r"SELECT '\'', java_method('java.lang.System', 'exit', 0)",
+     "SELECT \"'\", java_method('java.lang.System', 'exit', 0), \"'\"",
+     "SELECT 1 AS `x'`, java_method('java.lang.System', 'exit', 0) AS `'y`",
+     "SELECT 1 /* /* */ ' */, java_method('java.lang.System', 'exit', 0) --'",
+     r"SELECT r'\', java_method('java.lang.System', 'exit', 0) --'",
+     "SELECT 1 -- x\r, java_method('java.lang.System', 'exit', 0)",
+     # a backslash before LF continues a -- comment; /*+ inside a
+     # comment opens no nested level; a raw string after USING
+     "SELECT 1 -- \\\n'\n, java_method('java.lang.System', 'exit', 0) --'",
+     "SELECT 1 /* /*+ */, java_method('java.lang.System', 'exit', 0)",
+     "WITH x AS (SELECT 1) /* /*+ */ INSERT INTO t SELECT * FROM x",
+     "SELECT TRANSFORM(a) USING r'sh -c id' AS (b) FROM t",
+     'SELECT TRANSFORM(a) USING R"sh -c id" AS (b) FROM t',
+     # hint arguments are expressions: the code scan reads them
+     "SELECT /*+ REPARTITION(java_method('java.lang.System', 'exit', 0)) */ 1"],
 )
 def test_readonly_rejects_mutations(sql):
     with pytest.raises(ValueError):
@@ -213,11 +244,22 @@ def test_readonly_allows_comment_prefix_and_literals():
     ensure_readonly("/* note */ SELECT 1")
     ensure_readonly("SELECT * FROM t WHERE note = 'please drop table x'")
     ensure_readonly("SELECT * FROM t WHERE v LIKE '%insert%'")
+    ensure_readonly("SELECT * FROM t WHERE note = 'java_method(x)'")
+    ensure_readonly("-- reflect(\nSELECT 1")
+    ensure_readonly(r"SELECT * FROM t WHERE a = 'don\'t drop' AND b = \"a--b\"")
+    ensure_readonly("SELECT 1 /* outer /* inner */ drop table t */")
 
 
 def test_readonly_allows_select_with_replace_function():
     ensure_readonly("SELECT replace(c_name, 'a', 'b') FROM customer")
     ensure_readonly("SELECT 1 OFFSET 0")  # 'set' inside 'offset'
+    # the code-execution scan matches calls and script USING, not names
+    ensure_readonly("SELECT reflect, java_method, identifiers FROM t")
+    ensure_readonly("SELECT my_reflect(a) FROM t")
+    ensure_readonly("SELECT transform(arr, x -> x + 1) FROM t")
+    ensure_readonly("SELECT * FROM a JOIN b USING (k)")
+    # a hint name is not a mutation: MERGE is the sort-merge join hint
+    ensure_readonly("SELECT /*+ MERGE(a) */ * FROM a JOIN b ON a.k = b.k")
 
 
 @pytest.mark.parametrize(

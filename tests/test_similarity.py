@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from ask_duckdb_spark.operators import QUERIES
-from tests.conftest import SF_DIR_001
+from tests.conftest import SF_DIR_001, union_find_labels
 
 
 @pytest.fixture(scope="module")
@@ -105,27 +105,35 @@ def test_x29_clusters_equal_union_find(spark):
         (r.id_a, r.id_b)
         for r in QUERIES["x2_minhash_neardup"](spark, SF_DIR_001).collect()
     ]
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    want = {v: find(v) for v in parent}
     got = {
         r.doc_id: r.cluster
         for r in QUERIES["x29_dedup_clusters"](spark, SF_DIR_001).collect()
     }
-    assert got == want
+    assert got == union_find_labels(pairs)
     assert len(set(got.values())) > 1  # real multi-cluster structure
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # diameter 39: 40 propagation rounds, every label 0
+        [(i, i + 1) for i in range(39)],
+        [],
+        # a chain, a pair, and a star whose center is not its minimum
+        [(10, 11), (11, 12), (20, 21), (35, 30), (35, 36), (35, 37), (35, 38)],
+    ],
+    ids=["path40", "empty", "two_components_and_star"],
+)
+def test_connected_components_equal_union_find(spark, edges):
+    """The kernel on synthetic edge lists: exact union-find labels,
+    whatever the component diameter."""
+    from ask_duckdb_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    out = connected_components(pairs)
+    got = {r.v: r.label for r in out.collect()}
+    out.unpersist()
+    assert got == union_find_labels(edges)
 
 
 def test_x4b_simhash_pairing_exact_within_radius_and_x2_overlap(spark):
